@@ -4,9 +4,9 @@ another way. Run from the root of a checkout:
 
     python3 perfbench/test_reconcile.py
 
-Each test makes one traced run of one workload (about a minute each) and
-keeps its raw record. A counter that cannot be reconciled is not published
-by run.py; the tests below name the ones left out and why.
+Each test class makes one traced run of one workload (about a minute each)
+and checks its raw record. A counter that cannot be reconciled is not
+published by run.py.
 """
 import argparse
 import glob
