@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
 import graft.operators.{Checks, Facts, Staging}
 
 /** The engine's `dbt build` equivalent: materialize the model DAG in
@@ -66,7 +67,9 @@ object Build {
     def table(name: String, df: DataFrame): DataFrame = {
       val path = s"$warehouseDir/$name"
       df.write.mode("overwrite").parquet(path)
-      val back = spark.read.parquet(path)
+      // the footer holds exactly df's schema (a file relation reads it
+      // back nullable either way), so skip the inference job
+      val back = spark.read.schema(df.schema).parquet(path)
       back.createOrReplaceTempView(name)
       back
     }
@@ -112,6 +115,8 @@ object Build {
     * a daily rebuild touches the recent months' partitions (GBs), never
     * the historical ones (the other ~99% of the table), and readers
     * prune on `ship_month` (see the PlanSpec partition-pruning test).
+    * The overwrite mode is a per-write option, so the session's conf is
+    * never touched.
     *
     * `sinceMonth = None` is the full-refresh face (initial build).
     */
@@ -122,19 +127,12 @@ object Build {
       sinceMonth: Option[String]): String = {
     import org.apache.spark.sql.functions._
     val path = s"$warehouseDir/fact_lineitem_monthly"
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val fact = Facts.factLineitem(spark, sfDir)
-        .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
-      val slice = sinceMonth.fold(fact)(m => fact.filter(col("ship_month") >= m))
-      slice.write.mode("overwrite").partitionBy("ship_month").parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    val fact = Facts.factLineitem(spark, sfDir)
+      .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
+    val slice = sinceMonth.fold(fact)(m => fact.filter(col("ship_month") >= m))
+    slice.write.mode("overwrite")
+      .option(DataSourceUtils.PARTITION_OVERWRITE_MODE, "dynamic")
+      .partitionBy("ship_month").parquet(path)
     path
   }
 

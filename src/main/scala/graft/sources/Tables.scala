@@ -1,5 +1,8 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, timestamp_micros, unix_micros}
 import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
@@ -11,11 +14,13 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZT
   * `taxi_zone_lookup` CSV seed with per-column type overrides
   * (dbt_project.yml:43-47). Here sources are parquet directories and
   * seeds are CSVs; both come back as DataFrames whose scans Catalyst can
-  * prune and push filters into.
+  * prune and push filters into. Parquet tables are read through
+  * [[Tables.parquet]], so a table's footer schema is inferred once per
+  * file, not on every read.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Tables.parquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")
@@ -41,6 +46,58 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+
+  /** Session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private final case class FileId(path: String, length: Long, modificationTime: Long)
+
+  /** (qualified path, inference conf values) → (the files the schema was
+    * inferred from, that schema). A rewritten path replaces its entry.
+    */
+  private val footerSchemas =
+    new ConcurrentHashMap[(String, Seq[Option[String]]), (Seq[FileId], StructType)]()
+
+  /** `spark.read.parquet(path)` without the footer schema-inference job on
+    * every call: the schema inferred on the first read of `path` is
+    * memoized and later reads pass it to `spark.read.schema`.
+    *
+    * The memo key is the session's values of [[inferenceConfs]] plus the
+    * sorted `(path, length, modificationTime)` of every file under `path`,
+    * partition directories included. Rewriting, adding or removing a
+    * file, or changing one of those confs, invalidates the entry and the
+    * next read infers again. The memo lives as long as the JVM and holds
+    * one entry per path and conf set.
+    *
+    * The file identities come from `getFileStatus` and `listStatus`. Do
+    * not switch to `listFiles`: on the local filesystem its
+    * `LocatedFileStatus` forks a `stat` process per file to load
+    * permissions, which adds process I/O to every read.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ids = files(fs, fs.getFileStatus(p)).sortBy(_.path)
+    val key = (fs.makeQualified(p).toString, inferenceConfs.map(spark.conf.getOption))
+    val schema = footerSchemas.get(key) match {
+      case (`ids`, s) => s
+      case _ =>
+        val s = spark.read.parquet(path).schema
+        footerSchemas.put(key, (ids, s))
+        s
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** Every file under `st`, recursively (partition directories too). */
+  private def files(fs: FileSystem, st: FileStatus): Seq[FileId] =
+    if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files(fs, _))
+    else Seq(FileId(st.getPath.toString, st.getLen, st.getModificationTime))
 
   /** Normalize an events frame's `ts` column to a raw nanosecond epoch
     * long, whatever logical type the scan produced:

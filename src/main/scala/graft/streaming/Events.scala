@@ -271,7 +271,7 @@ object Events {
       spark, 8) {
     import org.apache.spark.sql.streaming.Trigger
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = Tables.parquet(spark, path).schema
     // FileStreamSource consumes a DIRECTORY (the arrival contract:
     // files land, get processed once); stage the feed into one
     val feedDir = stageFeed(path, "graft_feed")
@@ -302,7 +302,7 @@ object Events {
       spark, 8) {
     import org.apache.spark.sql.streaming.Trigger
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = Tables.parquet(spark, path).schema
     val feedDir = stageFeed(path, "graft_feed_dedup")
     val stream = Tables.normalizeEventTs(
         spark.readStream.schema(schema).parquet(feedDir.toString))
@@ -334,7 +334,7 @@ object Events {
       spark, 8) {
     import org.apache.spark.sql.streaming.Trigger
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = Tables.parquet(spark, path).schema
     val feedDir = stageFeed(path, "graft_feed_enrich")
     val stream = spark.readStream.schema(schema).parquet(feedDir.toString)
       .select(col("user_id"), col("value"))
@@ -376,8 +376,9 @@ object Events {
     val path = s"$dir/events.parquet"
     // schema = the RAW feed schema (feed-dir files must match it);
     // ev = the normalized view (ts as ns long) for high-water-mark math.
-    val schema = spark.read.parquet(path).schema
-    val ev = Tables.normalizeEventTs(spark.read.parquet(path))
+    val raw = Tables.parquet(spark, path)
+    val schema = raw.schema
+    val ev = Tables.normalizeEventTs(raw)
     val feedDir = stageFeed(path, "graft_feed_sess")
     val gapUs = 30L * 60 * 1000000
     val maxUs = ev.agg(max(nsToUs(col("ts")))).collect()(0).getLong(0)
@@ -461,7 +462,7 @@ object Events {
       spark, 8) {
     import org.apache.spark.sql.streaming.Trigger
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = Tables.parquet(spark, path).schema
     val feedDir = stageFeed(path, "graft_feed_join")
     def feed() = Tables.normalizeEventTs(
         spark.readStream.schema(schema).parquet(feedDir.toString))
@@ -625,9 +626,10 @@ object Events {
   def qStreamCdc(spark: SparkSession, dir: String): DataFrame = graft.operators.Mining.withShufflePartitions(
       spark, 8) {
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val raw = Tables.parquet(spark, path)
+    val schema = raw.schema
     val feedDir = tempDir("graft_feed_cdc")
-    spark.read.parquet(path).repartition(4)
+    raw.repartition(4)
       .write.mode("overwrite").parquet(feedDir.toString)
     val stateRoot = tempDir("graft_cdc_state")
     val ran = cdcPass(spark, schema, feedDir.toString, stateRoot, None)
@@ -653,9 +655,10 @@ object Events {
   def qStreamRestart(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Mining.withShufflePartitions(spark, 8) {
       val path = s"$dir/events.parquet"
-      val schema = spark.read.parquet(path).schema
+      val raw = Tables.parquet(spark, path)
+      val schema = raw.schema
       val staged = tempDir("graft_restartq_stage")
-      spark.read.parquet(path).repartition(4)
+      raw.repartition(4)
         .write.mode("overwrite").parquet(staged.toString)
       val parts = staged.toFile.listFiles()
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
@@ -688,7 +691,7 @@ object Events {
       spark, 8) {
     import org.apache.spark.sql.streaming.Trigger
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = Tables.parquet(spark, path).schema
     val feedDir = stageFeed(path, "graft_feed_uniques")
     val stream = spark.readStream.schema(schema).parquet(feedDir.toString)
       .select(col("event_type"), col("user_id"))
@@ -740,7 +743,7 @@ object Events {
       spark, 8) {
     import org.apache.spark.sql.streaming.Trigger
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = Tables.parquet(spark, path).schema
     val feedDir = stageFeed(path, "graft_feed_sliding")
     val stream = Tables.normalizeEventTs(
         spark.readStream.schema(schema).parquet(feedDir.toString))
@@ -784,7 +787,7 @@ object Events {
       spark, 8) {
     import org.apache.spark.sql.streaming.Trigger
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = Tables.parquet(spark, path).schema
     val feedDir = stageFeed(path, "graft_feed_left_join")
     def feed() = Tables.normalizeEventTs(
         spark.readStream.schema(schema).parquet(feedDir.toString))
@@ -866,7 +869,7 @@ object Events {
       spark, 8) {
     import org.apache.spark.sql.streaming.Trigger
     val path = s"$dir/events.parquet"
-    val raw = spark.read.parquet(path)
+    val raw = Tables.parquet(spark, path)
     val schema = raw.schema
     val feedDir = tempDir("graft_feed_late")
     def stageWave(df: org.apache.spark.sql.DataFrame, n: Int, mtimeMs: Long): Unit = {
@@ -972,9 +975,10 @@ object Events {
     graft.operators.Mining.withShufflePartitions(spark, 8) {
       import org.apache.spark.sql.streaming.Trigger
       val path = s"$dir/events.parquet"
-      val schema = spark.read.parquet(path).schema
+      val raw = Tables.parquet(spark, path)
+      val schema = raw.schema
       val feedDir = tempDir("graft_feed_bp")
-      spark.read.parquet(path).repartition(4)
+      raw.repartition(4)
         .write.mode("overwrite").parquet(feedDir.toString)
       val stream = Tables.normalizeEventTs(
           spark.readStream.schema(schema)

@@ -35,6 +35,15 @@ class BuildSpec extends AnyFunSuite {
       .collect()(0).getLong(0) > 0)
   }
 
+  test("build reads each table back with the schema inference would give") {
+    val wh = Files.createTempDirectory("graft_wh_schema").toString
+    val report = Build.build(spark, dir, wh)
+    assert(report.tables.size == 4)
+    report.tables.foreach { t =>
+      assert(spark.table(t).schema == spark.read.parquet(s"$wh/$t").schema, t)
+    }
+  }
+
   test("lineage metadata agrees with what build() actually materializes") {
     val wh = Files.createTempDirectory("graft_wh_lin").toString
     val report = Build.build(spark, dir, wh)
@@ -139,6 +148,8 @@ class BuildSpec extends AnyFunSuite {
   test("incremental fact build: only the refreshed months rewrite, result equals full") {
     import org.apache.spark.sql.functions._
     val wh = Files.createTempDirectory("graft_inc").toString
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(mode)
     val path = Build.buildFactIncremental(spark, dir, wh, None)
     val full = spark.read.parquet(path)
     val total = full.count()
@@ -153,6 +164,8 @@ class BuildSpec extends AnyFunSuite {
     Thread.sleep(1100) // mtime granularity
     Build.buildFactIncremental(spark, dir, wh, Some(since))
     val after = mtimes
+    // dynamic overwrite is a per-write option: the session conf is untouched
+    assert(spark.conf.getOption(mode) == modeBefore)
 
     // identical content to a full rebuild
     val re = spark.read.parquet(path)
